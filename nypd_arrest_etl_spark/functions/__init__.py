@@ -6,6 +6,15 @@ reference Python ``apply`` loops (convert_timestamp,
 LAW_CAT_CD_MAPPING.get — /root/reference/scripts/transform.py:38-46,
 89-91) become Catalyst CASE/COALESCE chains that whole-stage codegen
 vectorizes.
+
+Each row-level transform is defined ONCE, as SQL text over an input
+SQL expression (the ``*_sql`` builders). The Column helpers wrap that
+text in one ``F.expr`` for a named column. Plan builders that emit many
+columns (``operators.clean``) splice the text into a single
+``selectExpr``/``filter``: every Column built through the DataFrame API
+is one or more Py4J round trips from the Python driver (~2.4 ms each on
+a 4-vCPU host), so a plan assembled Column by Column costs more to
+construct than a small batch costs to run.
 """
 
 from __future__ import annotations
@@ -16,32 +25,53 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def domain_guard(col: Column | str, valid: Sequence[str], default: str) -> Column:
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier. Any header is
+    legal (CSV names are arbitrary); the name is never parsed as a
+    nested-field path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """A Python string as a Spark SQL string literal (backslash escapes
+    are on by default, so backslashes and quotes are escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def domain_guard_sql(e: str, valid: Sequence[str], default: str) -> str:
     """Uppercase, keep if in `valid`, else `default`.
 
     Mirrors the law_cat_cd / perp_sex CASE guards
     (transform.py:27-35, load.py:128-139). Null-safe: null -> default.
     """
-    c = F.upper(F.col(col) if isinstance(col, str) else col)
-    return F.when(c.isin(*valid), c).otherwise(F.lit(default))
+    u = f"upper({e})"
+    return f"CASE WHEN {u} IN ({', '.join(map(sql_str, valid))}) THEN {u} ELSE {sql_str(default)} END"
 
 
-def dict_map(col: Column | str, mapping: Mapping[str, str], passthrough: bool = True) -> Column:
+def domain_guard(col: str, valid: Sequence[str], default: str) -> Column:
+    return F.expr(domain_guard_sql(sql_ident(col), valid, default))
+
+
+def dict_map_sql(e: str, mapping: Mapping[str, str], passthrough: bool = True) -> str:
     """Literal dict lookup as a CASE chain (constant-folded by Catalyst).
 
     passthrough=True keeps the original value when unmapped
     (borough map, transform.py:20-26,148-150).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    expr = None
-    for k, v in mapping.items():
-        cond = c == F.lit(k)
-        expr = F.when(cond, F.lit(v)) if expr is None else expr.when(cond, F.lit(v))
-    assert expr is not None
-    return expr.otherwise(c) if passthrough else expr
+    assert mapping
+    whens = " ".join(f"WHEN {e} = {sql_str(k)} THEN {sql_str(v)}" for k, v in mapping.items())
+    return f"CASE {whens}{f' ELSE {e}' if passthrough else ''} END"
 
 
-def parse_date_with_epoch_fallback(col: Column | str) -> Column:
+def dict_map(col: str, mapping: Mapping[str, str], passthrough: bool = True) -> Column:
+    return F.expr(dict_map_sql(sql_ident(col), mapping, passthrough))
+
+
+_ISO_DATE = r"^\d{4}-\d{1,2}-\d{1,2}([T ].*)?$"
+_EPOCH_MILLIS = r"^[+-]?\d{11,}(\.\d*)?$"
+
+
+def parse_date_with_epoch_fallback_sql(e: str) -> str:
     """Date parse with epoch-millis rescue (transform.py:106-118).
 
     Tries ISO date / ISO timestamp via the cast grammar (accepts
@@ -63,22 +93,23 @@ def parse_date_with_epoch_fallback(col: Column | str) -> Column:
       parse here up to Spark's full date range — the engine does not
       inherit pandas' 64-bit-nanosecond ceiling.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.trim(c.cast("string"))
+    s = f"trim(CAST({e} AS STRING))"
     # full yyyy-mm-dd shape required before the cast: the bare cast
     # grammar also accepts 'yyyy' and 'yyyy-mm', so a 4-digit numeric
     # like '1000' would become year-1000 instead of falling through
     # to the millis rescue / null (r9 hypothesis find)
-    iso = F.when(
-        s.rlike(r"^\d{4}-\d{1,2}-\d{1,2}([T ].*)?$"), s.try_cast("date")
-    )
-    is_numeric = s.rlike(r"^[+-]?\d{11,}(\.\d*)?$")
-    ms = s.try_cast("double")
+    iso = f"CASE WHEN {s} RLIKE {sql_str(_ISO_DATE)} THEN try_cast({s} AS DATE) END"
+    is_numeric = f"{s} RLIKE {sql_str(_EPOCH_MILLIS)}"
+    ms = f"try_cast({s} AS DOUBLE)"
     # stay inside Spark's timestamp range (±~year 0001/9999) so the
     # rescue itself can never raise under ANSI mode
-    in_range = (ms >= F.lit(-62135596800000.0)) & (ms <= F.lit(253402300799000.0))
-    epoch = F.to_date(F.timestamp_seconds(ms / F.lit(1000.0)))
-    return F.coalesce(iso, F.when(is_numeric & in_range, epoch))
+    in_range = f"{ms} >= -62135596800000.0D AND {ms} <= 253402300799000.0D"
+    epoch = f"to_date(timestamp_seconds({ms} / 1000.0D))"
+    return f"coalesce({iso}, CASE WHEN {is_numeric} AND {in_range} THEN {epoch} END)"
+
+
+def parse_date_with_epoch_fallback(col: str) -> Column:
+    return F.expr(parse_date_with_epoch_fallback_sql(sql_ident(col)))
 
 
 # Exactly the characters Python's str.strip() treats as whitespace
@@ -94,25 +125,31 @@ _PY_WHITESPACE_ONLY = (
 )
 
 
-def non_blank(col: Column | str) -> Column:
+def non_blank_sql(e: str) -> str:
     """Not-null and not whitespace-only (required-key filter,
     transform.py:100-104) — Python-strip semantics, see
     :data:`_PY_WHITESPACE_ONLY`. The null guard stays a separate
     conjunct so Catalyst still pushes IsNotNull into the scan."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.isNotNull() & ~c.cast("string").rlike(_PY_WHITESPACE_ONLY)
+    return f"({e} IS NOT NULL AND NOT CAST({e} AS STRING) RLIKE {sql_str(_PY_WHITESPACE_ONLY)})"
 
 
-def scrub_nan_strings(col: Column | str) -> Column:
+def non_blank(col: str) -> Column:
+    return F.expr(non_blank_sql(sql_ident(col)))
+
+
+def scrub_nan_strings_sql(e: str) -> str:
     """Replace the pandas 'nan' stringification artifact with null.
 
     The reference casts to str then replaces 'nan' with ''
     (transform.py:79-85); we keep proper nulls internally and apply the
     observable defaults at fill time (T8).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    s = c.cast("string")
-    return F.when(s.isin("nan", "None", ""), F.lit(None)).otherwise(s)
+    s = f"CAST({e} AS STRING)"
+    return f"CASE WHEN {s} IN ('nan', 'None', '') THEN NULL ELSE {s} END"
+
+
+def scrub_nan_strings(col: str) -> Column:
+    return F.expr(scrub_nan_strings_sql(sql_ident(col)))
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,8 @@ prefix filter's global-frequency ordering (rarest-first).
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -158,6 +160,16 @@ def hashed_shingle_postings(
 # ---------------------------------------------------------------------------
 
 
+def _pruning_ratio(threshold: float) -> tuple[int, int]:
+    """The threshold the PPJoin pruning bounds use, as an exact
+    num/den: the smallest Jaccard the final 6-place rounded verify
+    (``round(jac, 6) >= t``, the oracles' definition) can accept, i.e.
+    t - 5e-7 with t read as the decimal it is written as. A bound may
+    admit too many candidates, never too few."""
+    r = Fraction(str(threshold)) - Fraction(1, 2 * 10**6)
+    return max(r.numerator, 0), r.denominator
+
+
 def jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -212,9 +224,13 @@ def jaccard_pairs(
         )
         .cache()
     )
-    prefix_len = (
-        F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    ).cast("int")
+    # Every pruning bound is exact integer arithmetic over the
+    # threshold as a rational num/den: in doubles, ceil(0.8/1.8 * 126)
+    # is 57, not 56, which would prune pairs whose Jaccard is exactly 0.8.
+    # BIGINT products: n * den overflows INT past ~1k shingles.
+    num, den = _pruning_ratio(threshold)
+    # ceil(t * n) in integers; the prefix is n - ceil(t*n) + 1 shingles
+    prefix_len = F.expr(f"CAST(n_sh - (CAST(n_sh AS BIGINT) * {num} + {den - 1}) div {den} + 1 AS INT)")
     prefixes = ordered.select(
         "doc_id",
         F.col("n_sh"),
@@ -228,15 +244,15 @@ def jaccard_pairs(
     #   ceil(t/(1+t) * (n1+n2)) — the minimum overlap J >= t implies.
     n1, n2 = F.col("a.n_sh"), F.col("b.n_sh")
     ub = 1 + F.least(n1 - F.col("a.pos") - 1, n2 - F.col("b.pos") - 1)
-    alpha = F.ceil(F.lit(threshold / (1 + threshold)) * (n1 + n2))
+    alpha = F.expr(f"((CAST(a.n_sh AS BIGINT) + b.n_sh) * {num} + {num + den - 1}) div {num + den}")
     a, b = prefixes.alias("a"), prefixes.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.sh") == F.col("b.sh"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (n2 * F.lit(threshold) <= n1)
-            & (n1 * F.lit(threshold) <= n2)
+            & F.expr(f"CAST(b.n_sh AS BIGINT) * {num} <= CAST(a.n_sh AS BIGINT) * {den}")
+            & F.expr(f"CAST(a.n_sh AS BIGINT) * {num} <= CAST(b.n_sh AS BIGINT) * {den}")
             & (ub >= alpha),
         )
         .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))

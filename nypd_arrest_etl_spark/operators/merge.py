@@ -19,8 +19,8 @@ the same batch anti-joins to zero rows.
 Two physical merge strategies:
 
 - ``merge_into_parquet`` — directory-append; the anti-join's target
-  side scans the WHOLE table (partition footers only when
-  partitioned). Simplest, but appended batches accumulate small files.
+  side scans the key column of the WHOLE table. Simplest, but
+  appended batches accumulate small files.
 - ``merge_overwrite_partitions`` — dynamic partition overwrite; the
   anti-join's target side is PRUNED to the partitions the batch
   actually touches, and only those partitions are rewritten (read
@@ -43,6 +43,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def dedup_first_writer_wins(df: DataFrame, key: str = "arrest_key", order_col: str | None = None) -> DataFrame:
@@ -103,13 +104,12 @@ def merge_into_parquet(
     incoming = _with_partition_col(incoming, partition_by, partition_source)
     target = None
     if os.path.exists(table_path):
-        try:
-            target = spark.read.parquet(table_path)
-        except Exception:
-            # Append-only path: an unreadable target degrades to a plain
-            # append (duplicates possible, no data loss). The overwrite
-            # variant below must NOT do this — there it would destroy rows.
-            target = None
+        # Only the key column, typed from the batch: a given schema runs
+        # no schema-inference job. An unreadable target fails the write
+        # (nothing is committed) — it never degrades to a plain append,
+        # which could land keys the target already holds.
+        key_schema = T.StructType([incoming.schema[key]])
+        target = spark.read.schema(key_schema).parquet(table_path)
     fresh = merge_insert_if_absent(incoming, target, key)
     # Single-pass write: the inserted rowcount rides the write action
     # as an Observation instead of a persist + count + write (which

@@ -6,7 +6,7 @@
   (transform.py:64, load.py:189).
 - S5: required-column check raises on a structurally bad file
   (extract.py:118-122, import_csv.py:37-41).
-- S2: high-watermark probe over the target table.
+- S2: high-watermark probe over the target table's footer statistics.
 
 The reference's 50k/100k chunking disappears: partitions are the unit
 of parallelism and ``spark.sql.files.maxPartitionBytes`` bounds memory.
@@ -14,10 +14,15 @@ of parallelism and ``spark.sql.files.maxPartitionBytes`` bounds memory.
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nypd_arrest_etl_spark.functions import sql_ident, sql_str
 from nypd_arrest_etl_spark.schema import RAW_SCHEMA, REQUIRED_COLUMNS
 
 
@@ -58,75 +63,96 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | None = Non
     The default path must honor the reference's T1 contract — a batch
     may arrive with UPPERCASE keys (transform.py:68-76) — but Spark's
     JSON reader binds an explicit schema's field names CASE-SENSITIVELY,
-    which would silently null (and then drop) every such row. So we
-    parse each line once into ``map<string,variant>`` and bind the
-    expected columns case-insensitively ourselves: still a single-pass,
-    inference-free scan (safe at 100 TB), robust to nested values like
-    ``lon_lat``, and unlike the reference it survives casing that is
-    mixed row-to-row within one batch. Pass ``schema`` to take the
-    pruned struct fast path when the producer's casing is known.
+    which would silently null (and then drop) every such row. So each
+    line is parsed once into ``map<string,string>`` (nested values such
+    as ``lon_lat`` come back as their JSON text), its key array is
+    lowercased once, and every expected column is bound as the value at
+    the FIRST position of its folded name: still a single-pass,
+    inference-free scan (safe at 100 TB), and unlike the reference it
+    survives casing that is mixed row-to-row within one batch. First
+    occurrence wins, matching the reference's precedence (the
+    lowercase column is used when both casings appear,
+    transform.py:68-76). Pass ``schema`` to take the pruned struct fast
+    path when the producer's casing is known.
+
+    The bind always yields the RAW_SCHEMA columns (a missing key is a
+    null value), so the required-column check has nothing to reject.
+
+    The bind ends in an ``observe`` barrier. Without it, Catalyst
+    pushes a downstream filter through the bind projections and
+    inlines the whole parse into every reference: ``clean`` over this
+    frame then evaluated ``from_json`` 25 times per row and ran 7-15x
+    slower. Filters do not move through a metrics node, so the parse
+    stays one projection evaluated once; column pruning still passes.
+    The unique name keeps two binds in one plan from clashing.
     """
     if schema is not None:
         df = spark.read.schema(schema).json(path)
         return validate_required(df)
 
-    lines = spark.read.text(path)
-    parsed = lines.select(
-        F.from_json("value", "map<string,variant>").alias("m")
+    parsed = spark.read.text(path).selectExpr("from_json(value, 'map<string,string>') AS m")
+    entries = parsed.selectExpr("map_values(m) AS v", "transform(map_keys(m), k -> lower(k)) AS k")
+    # get() is 0-based and null out of range; array_position is 1-based
+    # and 0 when absent.
+    bound = entries.selectExpr(
+        *[f"get(v, array_position(k, {sql_str(c)}) - 1) AS {sql_ident(c)}" for c in RAW_SCHEMA.fieldNames()]
     )
-    # Case-fold keys and cast variant->string in ONE pass over the
-    # entries (casts per present entry ~10, not per probed column 18 —
-    # variant casts dominate bind cost), then drop all but the FIRST
-    # occurrence of each folded key before building the lookup map:
-    # first-wins matches the reference's precedence (the lowercase
-    # column is used when both casings appear, transform.py:68-76) and
-    # map_from_entries would otherwise throw on duplicates under the
-    # default mapKeyDedupPolicy — no session conf required. Each array
-    # is bound to a real column before the next lambda references it
-    # (an inlined expression re-evaluates per element).
-    ents = F.transform(
-        F.map_entries("m"),
-        lambda e: F.struct(
-            F.lower(e["key"]).alias("key"),
-            e["value"].try_cast("string").alias("value"),
-        ),
-    )
-    bound = parsed.select(ents.alias("ents")).select(
-        "ents", F.transform("ents", lambda e: e["key"]).alias("keys")
-    )
-    m2 = F.map_from_entries(
-        F.filter(
-            "ents", lambda e, i: F.array_position(F.col("keys"), e["key"]) == i + 1
-        )
-    )
-    low = bound.select(m2.alias("m2"))
-    df = low.select(
-        *[F.try_element_at("m2", F.lit(c)).alias(c) for c in RAW_SCHEMA.fieldNames()]
-    )
-    return validate_required(df)
+    return bound.observe(f"read_jsonl.{uuid.uuid4().hex}", F.count(F.lit(1)))
+
+
+_YEAR_DIR = "arrest_year="  # the year-partitioned target layout (operators.merge.YEAR_COL)
 
 
 def high_watermark(spark: SparkSession, table_path: str, col: str = "arrest_date", default: str = "1900-01-01"):
-    """S2: MAX(col) over the target; default on empty/missing
-    (extract.py:42-54). A partition-pruned scan when the table is
-    partitioned by year(col) — only partition metadata + max per file
-    footer is touched."""
-    import os
+    """S2: MAX(col) over the target; default when the target does not
+    exist or holds no value of ``col`` (extract.py:42-54).
 
+    Runs no Spark job: the max comes from the Parquet footer statistics
+    of the target's data files, read with pyarrow on the driver
+    (``spark`` is unused; it stays in the signature of the pipeline
+    stage). Paths starting with ``_`` or ``.`` are skipped, as Spark's
+    reader skips them, and so are row groups without rows. On a
+    year-partitioned target only the newest ``arrest_year=`` directory
+    that holds a value is read. A file that is not Parquet, or a row
+    group holding values of ``col`` without a max statistic for it,
+    raises: a wrong watermark would silently drop or re-admit rows.
+    """
     if not os.path.exists(table_path):
         return default
-    try:
-        df = spark.read.parquet(table_path)
-        if "arrest_year" in df.columns:
-            # two-step: max partition value prunes the real scan to the
-            # newest year directory (footer-only elsewhere)
-            ymax = df.agg(F.max("arrest_year")).collect()[0][0]
-            if ymax is not None:
-                df = df.filter(F.col("arrest_year") == ymax)
-        row = df.agg(F.max(col).alias("hwm")).collect()[0]
-    except Exception:
-        return default
-    return row["hwm"] or default
+    years = sorted(
+        (int(d[len(_YEAR_DIR):]), d)
+        for d in os.listdir(table_path)
+        if d.startswith(_YEAR_DIR) and d[len(_YEAR_DIR):].isdigit()
+    )
+    for root in [os.path.join(table_path, d) for _, d in reversed(years)] or [table_path]:
+        found = [v for f in _data_files(root) if (v := _footer_max(f, col)) is not None]
+        if found:
+            return max(found)
+    return default
+
+
+def _data_files(root: str):
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        yield from (os.path.join(dirpath, f) for f in files if not f.startswith(("_", ".")))
+
+
+def _footer_max(path: str, col: str):
+    """Max of ``col`` over one Parquet file's row-group statistics;
+    None when the file holds no non-null value of it."""
+    meta = pq.ParquetFile(path).metadata
+    paths = [meta.schema.column(i).path for i in range(meta.num_columns)]
+    best = None
+    for g in range(meta.num_row_groups):
+        rg = meta.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(paths.index(col)).statistics if col in paths else None
+        if st is not None and st.has_min_max:
+            best = st.max if best is None else max(best, st.max)
+        elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+            raise ValueError(f"{path}: row group {g} has no max statistic for {col!r}")
+    return best
 
 
 def incremental_filter(df: DataFrame, hwm, col: str = "arrest_date") -> DataFrame:

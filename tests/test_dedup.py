@@ -1,6 +1,10 @@
 """Dedup operator semantics on controlled corpora + the driver's
 documents table at sf0.001."""
 
+import itertools
+import math
+from fractions import Fraction
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +66,58 @@ def test_jaccard_prefix_filter_is_complete(spark, sf_dir):
         .collect()
     }
     assert fast == naive
+
+
+def _float_bound_misses(t: float, limit: int) -> list[int]:
+    """Sums n1+n2 below ``limit`` where the double-precision PPJoin
+    position bound ceil(t/(1+t)*(n1+n2)) exceeds the exact one."""
+    num, den = Fraction(str(t)).as_integer_ratio()
+    return [
+        s for s in range(2, limit)
+        if math.ceil(t / (1 + t) * s) != -(-(s * num) // (num + den))
+    ]
+
+
+def _chain(prefix: str, first: int, count: int) -> str:
+    """Words w_first .. w_(first+count): exactly ``count`` distinct
+    word bigrams; two chains share the bigrams their ranges overlap."""
+    return " ".join(f"{prefix}w{j}" for j in range(first, first + count + 1))
+
+
+@pytest.mark.parametrize("t", [0.8, 0.9])
+def test_jaccard_pairs_keeps_pairs_exactly_at_threshold(spark, t):
+    """Pairs whose shingle counts hit the sums where floating-point
+    bounds round the wrong way, with Jaccard EXACTLY t (and one shared
+    shingle short of it), against a brute-force all-pairs reference.
+    A pruning bound may admit too many candidates, never too few."""
+    sums = _float_bound_misses(t, 300)
+    assert sums[:2] == ([63, 117] if t == 0.8 else [133, 247])  # the cases that were lost
+    num, den = Fraction(str(t)).as_integer_ratio()
+    rows = []
+    for k, s in enumerate(sums[:3]):
+        inter = s * num // (num + den)  # J = inter / (s - inter) == t
+        n1 = s // 2
+        for miss in (0, 1):  # at the threshold, then just below it
+            tag = f"p{k}m{miss}"
+            rows.append((len(rows), _chain(tag, 0, n1)))
+            rows.append((len(rows), _chain(tag, n1 - inter + miss, s - n1)))
+    got = {
+        (r.doc_id_1, r.doc_id_2, r.jaccard)
+        for r in D.jaccard_pairs(spark.createDataFrame(rows, "doc_id long, text string"), t).collect()
+    }
+
+    def bigrams(text):
+        w = text.split()
+        return set(zip(w, w[1:]))
+
+    want = set()
+    for (i, a), (j, b) in itertools.combinations(rows, 2):
+        x, y = bigrams(a), bigrams(b)
+        jac = round(len(x & y) / len(x | y), 6)
+        if jac >= t:
+            want.add((i, j, jac))
+    assert len(want) == 3 and {jac for _, _, jac in want} == {t}
+    assert got == want
 
 
 def test_short_docs_emit_no_shingles_and_never_pair(spark):

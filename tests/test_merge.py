@@ -238,3 +238,18 @@ def test_observe_metrics_report_scanned_and_dropped(spark, tmp_path):
     r = run_etl(spark, str(p), str(tmp_path / "t"))
     assert r.inserted == 2
     assert r.details == {"scanned": 4, "cleaned": 2, "dropped_invalid": 2}
+
+
+def test_merge_into_corrupt_target_raises_and_adds_no_file(spark, tmp_path):
+    """An unreadable target fails the merge; it never degrades to a
+    plain append, which could land keys the target already holds."""
+    import os
+
+    target = tmp_path / "t"
+    target.mkdir()
+    (target / "part-00000.parquet").write_bytes(b"PAR1 not really parquet PAR1")
+    before = sorted(os.walk(target))
+    df = clean(spark.createDataFrame([("A", "2025-01-01")], "arrest_key string, arrest_date string"))
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        merge_into_parquet(spark, df, str(target))
+    assert sorted(os.walk(target)) == before

@@ -1,4 +1,6 @@
-"""File-source contracts (S3/S4/S5)."""
+"""File-source contracts (S2/S3/S4/S5)."""
+
+import pytest
 
 from nypd_arrest_etl_spark.operators.clean import clean
 from nypd_arrest_etl_spark.sources.files import read_csv
@@ -81,3 +83,180 @@ def test_xml_missing_required_column_fails_loudly(spark, tmp_path):
     write_xml(src, p)
     with pytest.raises(Exception, match="arrest_key|required"):
         read_xml(spark, p)
+
+
+def _write_target(path, dates, name="part-00000.parquet"):
+    """A target data file written by pyarrow, as run_etl's Parquet
+    would hold it (arrest_date as a DATE column)."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    days = [None if d is None else dt.date.fromisoformat(d) for d in dates]
+    table = pa.table(
+        {
+            "arrest_key": pa.array([f"K{i}" for i in range(len(dates))], pa.string()),
+            "arrest_date": pa.array(days, pa.date32()),
+        }
+    )
+    pq.write_table(table, os.path.join(path, name))
+
+
+def test_high_watermark_reads_footers_and_skips_hidden_paths(tmp_path):
+    """The max comes from footer statistics: `_`/`.`-prefixed paths
+    and row-group-less files are skipped, all-null files add nothing,
+    a missing target gives the default."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nypd_arrest_etl_spark.sources.files import high_watermark
+
+    t = tmp_path / "t"
+    assert high_watermark(None, str(t)) == "1900-01-01"
+    _write_target(t, ["2024-01-05", "2024-03-01"])
+    _write_target(t, ["2024-02-01", None], "part-00001.parquet")
+    _write_target(t, [None, None], "part-00002.parquet")
+    _write_target(t / "_temporary" / "0", ["2030-01-01"])
+    _write_target(t, ["2031-01-01"], ".part-00003.parquet")
+    (t / "_SUCCESS").write_text("")
+    empty = pa.table({"arrest_key": pa.array([], pa.string()), "arrest_date": pa.array([], pa.date32())})
+    pq.write_table(empty, str(t / "part-00004.parquet"))
+    assert high_watermark(None, str(t)) == dt.date(2024, 3, 1)
+
+
+def test_high_watermark_reads_only_newest_year_partition(tmp_path):
+    """On a year-partitioned target only the newest arrest_year=
+    directory holding a value is read: an unreadable older year is
+    never opened, and an empty newest year falls back to the next."""
+    import datetime as dt
+
+    from nypd_arrest_etl_spark.sources.files import high_watermark
+
+    t = tmp_path / "t"
+    _write_target(t / "arrest_year=2023", ["2023-12-31"])
+    (t / "arrest_year=2022").mkdir()
+    (t / "arrest_year=2022" / "part-00000.parquet").write_bytes(b"corrupt")
+    _write_target(t / "arrest_year=2024", ["2024-06-30", "2024-01-01"])
+    _write_target(t / "arrest_year=2025", [None])
+    assert high_watermark(None, str(t)) == dt.date(2024, 6, 30)
+
+
+def test_high_watermark_raises_on_corrupt_file(tmp_path):
+    """A corrupt data file must fail the watermark, never fall back to
+    the default: a 1900-01-01 watermark would re-admit every row from
+    behind the real one."""
+    from nypd_arrest_etl_spark.sources.files import high_watermark
+
+    t = tmp_path / "t"
+    _write_target(t, ["2024-01-05"])
+    (t / "part-00001.parquet").write_bytes(b"PAR1 not really parquet")
+    with pytest.raises((ValueError, OSError)):
+        high_watermark(None, str(t))
+
+
+def test_high_watermark_raises_without_statistics(tmp_path):
+    """A non-empty file with no max statistic for the column raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nypd_arrest_etl_spark.sources.files import high_watermark
+
+    t = tmp_path / "t"
+    t.mkdir()
+    table = pa.table({"arrest_date": pa.array([19000], pa.int32()).cast(pa.date32())})
+    pq.write_table(table, str(t / "part-00000.parquet"), write_statistics=False)
+    with pytest.raises(ValueError, match="no max statistic"):
+        high_watermark(None, str(t))
+
+
+def test_high_watermark_matches_spark_max_on_a_spark_written_target(spark, tmp_path):
+    """Footer statistics agree with Spark's own MAX on a target that
+    Spark wrote (one partitioned write, one flat) and pyarrow extended."""
+    from pyspark.sql import functions as F
+
+    from nypd_arrest_etl_spark.sources.files import high_watermark
+
+    df = spark.createDataFrame(
+        [("A", "2023-05-01"), ("B", "2024-02-29"), ("C", None)], "arrest_key string, arrest_date string"
+    ).selectExpr("arrest_key", "CAST(arrest_date AS DATE) AS arrest_date")
+    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
+    df.write.parquet(flat)
+    _write_target(flat, ["2024-03-02"], "part-99999-pyarrow.parquet")
+    df.withColumn("arrest_year", F.year("arrest_date")).write.partitionBy("arrest_year").parquet(part)
+    for t in (flat, part):
+        want = spark.read.parquet(t).agg(F.max("arrest_date")).first()[0]
+        assert high_watermark(spark, t) == want
+
+
+def _jsonl(tmp_path, rows):
+    import json
+
+    p = tmp_path / "week.jsonl"
+    p.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    return str(p)
+
+
+def test_jsonl_bind_parses_each_line_once(spark, tmp_path):
+    """Regression for a trap in the bind: without a barrier, Catalyst
+    pushes clean()'s filter through the bind projections and inlines
+    the parse into every reference (from_json 25 times per row, 7-15x
+    slower). The optimized plan must parse each line exactly once."""
+    from nypd_arrest_etl_spark.operators.clean import clean
+    from nypd_arrest_etl_spark.sources.files import read_jsonl
+
+    p = _jsonl(tmp_path, [{"ARREST_KEY": "K1", "arrest_date": "2024-01-05"}])
+    df = clean(read_jsonl(spark, p))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    assert [r["arrest_key"] for r in df.collect()] == ["K1"]
+
+
+def test_jsonl_bind_keeps_nested_values_as_json_text(spark, tmp_path):
+    """Numbers, booleans and nested values bind as their JSON text;
+    absent keys and JSON nulls bind as null; a malformed line binds
+    every column as null."""
+    from nypd_arrest_etl_spark.sources.files import read_jsonl
+
+    p = _jsonl(
+        tmp_path,
+        [{"arrest_key": "K1", "arrest_date": 1748736000000, "Latitude": 40.5, "ky_cd": True,
+          "pd_cd": None, "LON_LAT": {"type": "Point", "coordinates": [-73.9, 40.7]}}],
+    )
+    with open(p, "a") as f:
+        f.write("not json\n")
+    rows = read_jsonl(spark, p).collect()
+    r = rows[0].asDict()
+    assert (r["arrest_key"], r["arrest_date"], r["latitude"], r["ky_cd"]) == ("K1", "1748736000000", "40.5", "true")
+    assert r["pd_cd"] is None and r["perp_sex"] is None
+    assert r["lon_lat"] == '{"type":"Point","coordinates":[-73.9,40.7]}'
+    assert set(rows[1].asDict().values()) == {None}
+
+
+def test_watermark_and_plan_construction_start_no_spark_job(spark, tmp_path):
+    """high_watermark reads footers on the driver, and building
+    transform(extract(p)) is pure plan construction: neither starts a
+    Spark job (census by job group, with a positive control)."""
+    from nypd_arrest_etl_spark import pipeline
+
+    _write_target(tmp_path / "t", ["2024-01-05"])
+    p = _jsonl(tmp_path, [{"arrest_key": "K1", "arrest_date": "2024-02-01"}])
+    sc = spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup
+
+    def census(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(jobs(group))
+
+    assert census("census-control", lambda: spark.range(1).collect()) >= 1
+    assert census("census-hwm", lambda: pipeline.high_watermark(spark, str(tmp_path / "t"))) == 0
+    assert census("census-build", lambda: pipeline.transform(pipeline.extract(spark, p))) == 0
