@@ -5,7 +5,7 @@ Re-expresses the capabilities of the reference ETL pipeline
 idiomatic Spark DataFrame/SQL engine, extended with the query surface
 and LLM-data-pipeline operators a 100 TB training-data pipeline needs:
 
-- ``session``    — tuned SparkSession factory (AQE, Arrow, UTC)
+- ``session``    — SparkSession factory sized from the host (Arrow, UTC)
 - ``schema``     — explicit StructTypes (raw + target NYPD schema)
 - ``operators``  — clean (T1-T12), merge (K4), dedup, similarity,
                    text analysis, multimodal plumbing

@@ -1,14 +1,10 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory for the engine.
 
-Design notes (100 TB posture):
-- AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
-  and join-strategy re-planning replace hand-tuned partition counts.
-- ``spark.sql.shuffle.partitions`` is a *local* default; on a real
-  cluster AQE's coalescing makes the initial number mostly irrelevant
-  as long as it is high enough (set to 2-3x total cores there).
-- Arrow on for every pandas/Python boundary (Pandas UDFs, toPandas).
-- Session timezone pinned to UTC so timestamp semantics are stable and
-  comparable with external engines (DuckDB oracle, Parquet writers).
+The driver heap and the ``local[N]`` core count come from the host the
+session starts on; ``SPARK_GRAFT_DRIVER_MEM`` and ``SPARK_GRAFT_CPUS``
+override them. Arrow serves every pandas/Python boundary and the
+session timezone is pinned to UTC, so timestamps compare exactly with
+external engines (DuckDB oracle, Parquet writers).
 """
 
 from __future__ import annotations
@@ -17,155 +13,66 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Parent of the package: Python UDF workers put it on their PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of MemAvailable in whole GiB
+    (at least 1g, at most 48g)."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    return f"{min(max(kib // 2 // 1024**2, 1), 48)}g"
+
+
+def cpu_count() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
     app_name: str = "nypd_arrest_etl_spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the tuned SparkSession.
-
-    Local mode is a single JVM; ``spark.driver.memory`` is the only
-    memory knob. On a cluster, the same config block applies except
-    master/memory come from the submitter.
-    """
-    cpus = int(DEFAULT_CPUS)
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or cpus
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    # -Xms pinned to -Xmx (r13): Spark only passes -Xmx for the driver
-    # JVM, leaving InitialHeapSize at ~2g and MinHeapSize at 32m — so
-    # G1 uncommits heap after every full GC (bench.py forces one every
-    # 20 queries; ContextCleaner's periodic GC does the same in
-    # production) and recommits it under the next query's allocation
-    # burst. On this paravirt host the commit/uncommit cycle is the
-    # measured session pathology: young pauses averaged 345 ms and one
-    # full GC took 18.3 s mid-bench (jstat, r13 notes), inflating
-    # whole query cohorts 3-10x. MinHeapSize=Xms stops the shrink side
-    # permanently; pages fault in once and stay. This is the same
-    # posture Spark itself uses for executors on YARN (-Xms=-Xmx) and
-    # what the tuning guide recommends for long-lived SQL drivers.
-    # SPARK_GRAFT_XMS overrides for experiments ("0" disables).
-    # -XX:+AlwaysPreTouch was TRIED here and REJECTED on measurement:
-    # this host's page-fault path intermittently collapses to tens of
-    # MB/s (host-side memory pressure; a 512 MB anonymous first-touch
-    # was timed at minutes during an episode), so eagerly zeroing the
-    # whole heap can stall session startup for half an hour. The -Xms
-    # pin alone gives the durable half of the win — a page faulted in
-    # once is NEVER given back and re-faulted — without betting
-    # startup latency on host fault bandwidth.
-    xms = os.environ.get("SPARK_GRAFT_XMS", driver_mem)
-    _builtin_java_opts = "-XX:ReservedCodeCacheSize=1g" + (
-        f" -Xms{xms}" if xms and xms != "0" else ""
-    )
-    # Transparent hugepages for the heap (madvise mode — the kernel
-    # default here): one 2 MB fault replaces 512 4 KB faults, which on
-    # this host's slow fault path (~10 us/page measured) is the
-    # difference between minutes and seconds of total first-touch
-    # stall, most of it otherwise inside young-GC pauses.
-    # SPARK_GRAFT_THP=0 disables.
-    if os.environ.get("SPARK_GRAFT_THP", "1") != "0":
-        _builtin_java_opts += " -XX:+UseTransparentHugePages"
-    # STW GC thread count, capped for virtualized hosts: with the
-    # JVM-derived default (23 threads at 32 vCPUs) every young pause
-    # needs all 23 vCPUs scheduled simultaneously; under the steal this
-    # host shows in bursts, one preempted GC thread stretches every
-    # pause to multiples of the host scheduling quantum (measured
-    # 345-522 ms average young pauses during steal episodes — 10x the
-    # healthy cost of copying the same survivors). Fewer, longer-lived
-    # GC threads trade parallel copy speed for immunity to vCPU
-    # preemption. SPARK_GRAFT_GC_THREADS overrides; "0" keeps the JVM
-    # default.
-    gc_threads = os.environ.get("SPARK_GRAFT_GC_THREADS", "8")
-    if gc_threads and gc_threads != "0":
-        _builtin_java_opts += f" -XX:ParallelGCThreads={gc_threads}"
-
+    """Build (or fetch) the engine's local SparkSession. ``extra_conf``
+    overrides the settings below; ``spark.driver.extraJavaOptions`` is
+    appended to the built-in flags instead."""
+    cpus = cpu_count()
+    # A many-query session JIT-compiles thousands of generated
+    # whole-stage classes; the JVM's 240m code cache fills after ~100
+    # query shapes, and every later query then runs ~3x slower.
+    java_opts = "-XX:ReservedCodeCacheSize=1g"
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.driver.memory", driver_memory())
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         # Python DataSource API pushdown (sources/rest.py pushFilters)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long (ns since epoch) and convert with
         # exact integer arithmetic (see plans.queries.events_with_ts).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # 32 executor threads + driver share ONE JVM in local mode: at
-        # 24g a long query session (bench = 104 queries x 2 passes,
-        # each broadcasting/caching) sits at the GC cliff — measured
-        # 167-250s for the same bench that runs in 65s at 48g. Keep
-        # headroom; the host has 128 GiB.
-        .config("spark.driver.memory", driver_mem)
-        # The generated-class cache defaults to 100 entries; a 120-query
-        # session generates ~1000 whole-stage classes per pass, so
-        # cross-query shared fragments (same scan/project shapes over
-        # the same tables) get LRU-evicted and recompiled — pure janino
-        # time on the cold path. 4096 entries keeps every shape of the
-        # whole registry resident (a class entry is small; heap cost is
-        # negligible next to the 48g heap).
+        # The generated-class cache defaults to 100 entries; a registry
+        # session generates ~1000 whole-stage classes per pass, so shared
+        # scan/project fragments would be evicted and recompiled.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
-        # Block-manager debris (shuffle files, broadcasts, dropped
-        # cache entries) is reclaimed by ContextCleaner after a JVM GC.
-        # r12 forced a full STW GC every 2min on the 48g heap to drain
-        # it continuously; the driver's r12 measurements showed that
-        # default taxed every small query 0.1-0.4s (46/60 queries
-        # regressed >10%, total 108->182s) WITHOUT fixing the
-        # anchor-drift pathology it targeted (drift 2.7-8.3 across the
-        # post-change runs). Reverted to Spark's own 30min default
-        # (r13, VERDICT r12 task 1); the env override stays for
-        # experiments. The real leak the 2min GC papered over — r12's
-        # never-unpersisted operator caches — is fixed at the source
-        # this round (caches reverted or given unpersist lifecycles).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
-        )
-        # ReservedCodeCacheSize: a many-query session JIT-compiles
-        # thousands of generated whole-stage classes; the JVM default
-        # (240m) fills after ~100 distinct query shapes, after which
-        # compilation degrades/stops and even trivial queries run
-        # 2-3x slower for the rest of the session (measured this
-        # round: every query late in the bench's sorted order ran a
-        # consistent ~3x slow — e.g. an untouched 0.23s top-terms at
-        # 0.70s — until the reserve was raised; with 1g the same
-        # queries sit back at their r11 values). 1g keeps the whole
-        # registry's compiled code resident — the posture Spark's
-        # tuning guide recommends for long-lived SQL drivers.
-        # (ExplicitGCInvokesConcurrent was ALSO A/B'd here and
-        # rejected: concurrent cycles on a 48g heap produced sustained
-        # multi-minute mark windows that slowed whole query cohorts
-        # 5-10x; the brief periodic STW purge is strictly better for
-        # this batch shape.)
-        # NOTE: builder.config only reaches the JVM when THIS process
-        # launches it (local mode / spark-submit without a pre-existing
-        # session); under client-mode spark-submit pass the same flag
-        # via --driver-java-options. extra_conf entries for this key
-        # are MERGED below (not overwritten) so callers can add flags
-        # without silently dropping the code-cache reserve.
-        .config("spark.driver.extraJavaOptions", _builtin_java_opts)
+        # builder.config reaches the JVM only when this process launches
+        # it; under client-mode spark-submit pass --driver-java-options.
+        .config("spark.driver.extraJavaOptions", java_opts)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
-        # keep the Python UDF worker pool alive between queries —
-        # re-forking 32 workers (+ numpy import) costs ~12 s
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.python.worker.idleTimeout", "30min")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # InferFiltersFromGenerate synthesizes `size(arr) > 0` under every
-        # explode(). For arrays COMPUTED by nested higher-order functions
-        # (shingles, winnowing fingerprints, minhash signatures — this
-        # engine's bread and butter) CollapseProject + predicate pushdown
-        # inline the whole lambda chain into that filter and push it below
-        # any Repartition: the corpus-wide array pipeline then re-executes
-        # single-partition AND per-element (O(n^2) per doc). The skip it
-        # buys (empty arrays) is one cheap branch in the Generate itself.
+        # InferFiltersFromGenerate puts `size(arr) > 0` under every explode().
+        # For arrays computed by nested higher-order functions (shingles,
+        # winnowing fingerprints, minhash signatures) the optimizer inlines
+        # the whole lambda chain into that filter below any Repartition, so
+        # the array pipeline re-runs single-partition and per element.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
@@ -173,7 +80,7 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         if k == "spark.driver.extraJavaOptions":
-            v = f"{_builtin_java_opts} {v}"
+            v = f"{java_opts} {v}"
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
