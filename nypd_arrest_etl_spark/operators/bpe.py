@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nypd_arrest_etl_spark.operators.graph import _pinned
+
 EOW = "</w>"
 
 
@@ -133,7 +135,7 @@ def bpe_train(
     # explode+groupBy (Spark does not reuse shuffle output across
     # separate actions on re-planned frames). The table is
     # vocabulary-sized (distinct words), not corpus-sized.
-    words = _words(df, text_col).localCheckpoint(eager=True)
+    words, free_words = _pinned(_words(df, text_col))
     # ONE bounded Arrow-backed action decides the path AND fetches the
     # vocab (the same shape as connected_components' r13 fix): the old
     # count()-then-collect() pair ran two jobs over the checkpointed
@@ -144,6 +146,7 @@ def bpe_train(
     # tie-break, so fetch order cannot change the learned merges.
     probe = words.limit(driver_vocab_threshold + 1).toPandas()
     if len(probe) <= driver_vocab_threshold:
+        free_words()  # the fetched frame is the whole training input
         return _train_inmem(
             list(zip(probe["word"].tolist(), probe["n"].tolist())), num_merges
         )
@@ -155,6 +158,7 @@ def bpe_train(
         lambda c, i: F.when(i == n_ch - 1, F.concat(c, F.lit(EOW))).otherwise(c),
     )
     cur = words.select(syms.alias("s"), "n").localCheckpoint(eager=True)
+    free_words()
 
     merges: list[tuple[str, str]] = []
     for it in range(num_merges):

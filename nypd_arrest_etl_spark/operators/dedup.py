@@ -890,7 +890,7 @@ def _embedding_pairs_blocked(
         )
     )
 
-    def tile(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def tile(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         i, j = int(key[0]), int(key[1])
         a = pdf[pdf["k"] == i]
         b = pdf[pdf["k"] == j]

@@ -8,67 +8,80 @@ needs a graph primitive that runs on the same DataFrames as the rest
 of the pipeline, not an external graph system.
 
 Execution model (Spark-first, no GraphX/RDDs):
-- Each iteration is ONE equi-join ranks><edges on src plus ONE
-  groupBy(dst) — both hash-partitioned on the same keys, so with
-  ``edges`` pre-partitioned on src the join side of every iteration
-  reuses one stable partitioning; only the O(nodes) rank table moves.
-- Dangling mass (nodes with no out-edges) is folded in per iteration
-  via a broadcast 1-row aggregate — never a driver collect in the
-  fixed-iteration path, so the whole plan stays lazy and the oracle
-  can replay it.
-- The convergent variant materializes each iterate via
-  ``localCheckpoint`` (lineage would otherwise grow linearly and
-  re-execute the whole chain every action) and stops on an L1 delta.
+- Each iteration is ONE equi-join ranks><edges on src, which sends
+  ``rank / odeg`` along every edge, plus ONE groupBy(node) that
+  gathers each node's teleport row with the contributions sent to it.
+  The edge list is partitioned on src once and carries each source's
+  out-degree, so only the O(nodes) rank table and map-side partial
+  sums of the contributions move.
+- Fixed-iteration variants fold dangling mass (rank held by nodes
+  with no out-edges) in through a broadcast 1-row aggregate, so the
+  whole plan stays lazy and the oracle can replay it.
+- Converged variants run ONE pinned plan per round: the round is
+  materialized with ``localCheckpoint`` (lineage would otherwise grow
+  linearly and re-execute the whole chain every round), and the
+  driver scalars the loop needs — the L1 delta and the next round's
+  dangling mass, the changed-label count, the surviving edge count —
+  ride that same job as an ``Observation``. No round runs a separate
+  probe job, the dangling mass enters the next round as a literal,
+  and every pin the result does not need is freed before returning.
 
 At 100 TB the edge list dwarfs the rank vector (|E| >> |V|): the edge
-side stays put (one repartition, reused every iteration — AQE keeps
+side stays put (one shuffle on src, reused every iteration — AQE keeps
 the rank side's smaller shuffle), and per-iteration network cost is
 O(|V|), which is the known floor for distributed power iteration.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import ExitStack
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 
-def _prepared(edges: DataFrame, src: str, dst: str, cache: bool = True):
-    """Distinct edge list co-partitioned on src, out-degrees, nodes.
+def _out_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct edge list [src, dst, odeg], hash-partitioned on src,
+    each row carrying its source's out-degree (a window over the src
+    partitioning, so it adds no shuffle of its own).
 
     NULL endpoints are dropped: a NULL src would silently vanish in
     the contribution join while still absorbing rank as a node, and a
     NULL dst is not a linkable target — neither is a meaningful graph
     vertex.
-
-    ``cache``: when True the three prepared tables are materialized as
-    InMemoryRelations so every plan-branch reference is a leaf. r12
-    turned this on for the fixed-iteration operators; the driver's
-    committed-protocol measurements showed it a pessimization there
-    (pagerank 0.70x, PPR 0.23x, components 0.47x vs r11 — plan TEXT
-    shrank, but runtime exchange reuse already deduplicated the
-    execution, so the cache only added a storage materialization per
-    reference class). r13 reverts the fixed-iteration callers to
-    cache=False; converged variants also pass cache=False and pin the
-    same tables with ``localCheckpoint`` (an eager RDD materialization
-    that additionally truncates lineage, which their per-iteration
-    driver actions require).
     """
-    e = (
+    return (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .na.drop(subset=["src", "dst"])
         .distinct()
+        .withColumn(
+            "odeg",
+            F.count(F.lit(1)).over(Window.partitionBy("src")).cast("double"),
+        )
     )
-    e = e.repartition("src")
-    if cache:
-        e = e.cache()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("odeg"))
-    nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))
-    ).distinct()
-    if cache:
-        deg = deg.cache()
-        nodes = nodes.cache()
-    return e, deg, nodes
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """Node table [node, dangling] of an ``_out_edges`` list: every
+    endpoint once, ``dangling`` True iff it has no out-edge."""
+    return (
+        e.select(F.col("src").alias("node"), F.lit(False).alias("dangling"))
+        .union(e.select(F.col("dst").alias("node"), F.lit(True).alias("dangling")))
+        .groupBy("node")
+        .agg(F.min("dangling").alias("dangling"))
+    )
+
+
+def _prepared(edges: DataFrame, src: str, dst: str):
+    """Lazy (edges[src, dst, odeg], out-degrees[src, odeg], nodes) for
+    the fixed-iteration variants; the out-degree table feeds their
+    in-plan dangling aggregate. They stay uncached: runtime exchange
+    reuse already deduplicates the repeated subtrees, and explicit
+    caches here measured slower on the committed protocol."""
+    e = _out_edges(edges, src, dst)
+    return e, e.select("src", "odeg").distinct(), _nodes(e)
 
 
 def _pinned(df: DataFrame):
@@ -90,17 +103,36 @@ def _pinned(df: DataFrame):
     return ck, _free
 
 
+def _pinned_observing(df: DataFrame, **metrics):
+    """``_pinned`` with driver scalars riding the pin's own job:
+    ``metrics`` maps names to aggregate Columns over ``df``'s rows.
+    Returns (pinned_df, free_handle, {name: value}) — the loop's
+    stopping probe costs no job of its own."""
+    obs = Observation()
+    ck, free = _pinned(
+        df.observe(obs, *(c.alias(name) for name, c in metrics.items()))
+    )
+    return ck, free, obs.get
+
+
 def _step(
     e: DataFrame,
-    deg: DataFrame,
+    deg: DataFrame | None,
     tele: DataFrame,
     ranks: DataFrame,
     damping: float,
+    dm: float | None = None,
 ) -> DataFrame:
-    """One power-iteration step: ranks[node, rank] -> ranks', with an
-    arbitrary teleport distribution ``tele``[node, t] (sums to 1):
+    """One power-iteration step with an arbitrary teleport
+    distribution ``tele``[node, t, ...] (t sums to 1) over ``ranks``
+    [node, rank, ...]:
 
         rank' = (1-d)*t + d*(contribs + dangling_mass*t)
+
+    ``tele`` must hold one row per node. The step returns its columns
+    plus the new ``rank``, so whatever the teleport table carries (a
+    dangling flag, the previous rank) rides the step without another
+    join.
 
     Uniform PageRank is the special case t = 1/n; personalized
     PageRank passes the normalized seed weights (r9 VERDICT task 5:
@@ -108,37 +140,57 @@ def _step(
     the power-iteration algebra). Dangling mass re-enters THROUGH the
     teleport distribution — for uniform t that is the classic uniform
     redistribution; for PPR it is the standard every-restart-respects-
-    the-seeds convention."""
-    contribs = (
-        ranks.join(deg, ranks["node"] == deg["src"])
-        .join(e, "src")
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") / F.col("odeg")).alias("c"))
+    the-seeds convention. With ``dm`` None it is summed in the plan
+    (ranks with no row in the out-degree table ``deg``) as a broadcast
+    1-row aggregate, keeping a fixed-iteration chain lazy; a converged
+    loop that observed the mass on the previous pinned round passes it
+    as ``dm`` (and ``deg`` None) instead.
+
+    Scatter-gather: each edge sends ``rank / odeg`` to its dst, and
+    each node's teleport row and the contributions sent to it meet in
+    ONE groupBy(node) — one shuffle of map-side partial sums, where a
+    left join of teleport rows to per-dst sums shuffled twice."""
+    sent = ranks.join(e, ranks["node"] == e["src"]).select(
+        F.col("dst").alias("node"), (F.col("rank") / F.col("odeg")).alias("c")
     )
-    # Dangling nodes hold rank but have no out-edges; their mass is
-    # redistributed via the teleport distribution. A broadcast 1-row
-    # aggregate keeps this inside the plan (no per-iteration driver
-    # action).
-    dangling = (
-        ranks.join(deg, ranks["node"] == deg["src"], "left_anti")
-        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-    )
-    return (
-        tele.join(contribs, tele["node"] == contribs["dst"], "left")
-        .crossJoin(F.broadcast(dangling))
-        .select(
-            "node",
-            (
-                F.lit(1.0 - damping) * F.col("t")
-                + F.lit(damping)
-                * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dm") * F.col("t"))
-            ).alias("rank"),
+    nxt = (
+        tele.withColumn("c", F.lit(None).cast("double"))
+        .unionByName(sent, allowMissingColumns=True)
+        .groupBy("node")
+        .agg(
+            # the one teleport row of each node holds every carried value
+            *(F.first(c, ignorenulls=True).alias(c) for c in tele.columns[1:]),
+            F.sum("c").alias("c"),
         )
+    )
+    if dm is None:
+        dangling = (
+            ranks.join(deg, ranks["node"] == deg["src"], "left_anti")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+        )
+        nxt, mass = nxt.crossJoin(F.broadcast(dangling)), F.col("dm")
+    else:
+        mass = F.lit(dm)
+    return nxt.select(
+        *tele.columns,
+        (
+            F.lit(1.0 - damping) * F.col("t")
+            + F.lit(damping)
+            * (F.coalesce(F.col("c"), F.lit(0.0)) + mass * F.col("t"))
+        ).alias("rank"),
     )
 
 
 def _uniform_tele(nodes: DataFrame, n_nodes: float) -> DataFrame:
-    return nodes.select("node", F.lit(1.0 / n_nodes).alias("t"))
+    return nodes.withColumn("t", F.lit(1.0 / n_nodes))
+
+
+def _no_ranks(nodes: DataFrame) -> DataFrame:
+    """The empty DataFrame[node, rank] of a graph with no node (every
+    edge had a NULL endpoint), built without lineage so it outlives
+    any freed pin."""
+    schema = T.StructType([nodes.schema["node"], T.StructField("rank", T.DoubleType())])
+    return nodes.sparkSession.createDataFrame([], schema)
 
 
 def pagerank(
@@ -162,9 +214,11 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError("pagerank needs at least 1 iteration")
-    e, deg, nodes = _prepared(edges, src, dst, cache=False)
-    n_nodes = float(nodes.count())
-    tele = _uniform_tele(nodes, n_nodes)
+    e, deg, nodes = _prepared(edges, src, dst)
+    n_nodes = nodes.count()
+    if not n_nodes:
+        return _no_ranks(nodes)
+    tele = _uniform_tele(nodes, float(n_nodes))
     ranks = tele.select("node", F.col("t").alias("rank"))
     free_prev = None
     for i in range(iterations):
@@ -188,9 +242,8 @@ def pagerank(
             if free_prev is not None:
                 free_prev()
             free_prev = free_now
-    if round_to is not None:
-        ranks = ranks.select("node", F.round("rank", round_to).alias("rank"))
-    return ranks
+    rank = F.col("rank") if round_to is None else F.round("rank", round_to)
+    return ranks.select("node", rank.alias("rank"))
 
 
 def pagerank_converged(
@@ -208,42 +261,53 @@ def pagerank_converged(
     before the ``max_iterations`` cap — without it a truncated result
     is indistinguishable from a converged one (r9 ADVICE,
     graph.py:167); callers that only want the ranks can still ignore
-    it, but audit paths should surface it.
+    it, but audit paths should surface it. A graph with no node (every
+    edge has a NULL endpoint) returns an empty DataFrame[node, rank],
+    0 iterations, converged.
 
-    Every iterate is pinned with ``localCheckpoint(eager=True)``:
-    without it, iteration k's plan embeds all k-1 predecessors, so the
-    per-iteration delta action would re-execute the entire history and
-    the lineage would eventually overflow the planner. The checkpoint
-    bounds each action to exactly one join+agg round. The L1-delta
-    agg is the one driver-visible scalar per iteration — O(1) rows,
-    the standard stopping probe for distributed power iteration.
+    One round is one pinned plan. The distinct edge list is pinned
+    once with ``odeg`` attached, and the node table [node, dangling]
+    is pinned from it with the node count observed on that job. Each
+    round's rank table carries ``rank`` beside ``prev`` and is pinned
+    with ``localCheckpoint(eager=True)`` — without the pin, round k's
+    plan would embed all k-1 predecessors — while an Observation on
+    the same job reads the two scalars the loop needs: the L1 delta
+    ``sum(|rank - prev|)`` and the dangling mass the next round takes
+    as a literal. Superseded rounds are freed as soon as their
+    successor is pinned, and the edge and node pins before returning:
+    the call leaves exactly one pin behind, the returned ranks.
     """
-    e, deg, nodes = _prepared(edges, src, dst, cache=False)
-    e = e.localCheckpoint(eager=True)
-    deg = deg.localCheckpoint(eager=True)
-    nodes = nodes.localCheckpoint(eager=True)
-    n_nodes = float(nodes.count())
-    tele = _uniform_tele(nodes, n_nodes)
-    ranks = tele.select("node", F.col("t").alias("rank")).localCheckpoint(
-        eager=True
-    )
-    it = 0
-    converged = False
-    free_prev = None  # iterate k-1's blocks die once k's delta is read
-    for it in range(1, max_iterations + 1):
-        nxt, free_nxt = _pinned(_step(e, deg, tele, ranks, damping))
-        delta = (
-            nxt.join(ranks.withColumnRenamed("rank", "prev"), "node")
-            .agg(F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("d"))
-            .collect()[0].d
+    if max_iterations < 1:
+        raise ValueError("pagerank_converged needs at least 1 iteration")
+    with ExitStack() as set_up:  # the returned ranks read neither pin
+        e, free_e = _pinned(_out_edges(edges, src, dst))
+        set_up.callback(free_e)
+        nodes, free_nodes, size = _pinned_observing(
+            _nodes(e), n=F.count(F.lit(1)), nd=F.count_if("dangling")
         )
-        if free_prev is not None:
-            free_prev()
-        ranks, free_prev = nxt, free_nxt
-        if delta is not None and delta < tol:
-            converged = True
-            break
-    return ranks, it, converged
+        set_up.callback(free_nodes)
+        if not size["n"]:
+            return _no_ranks(nodes), 0, True
+        ranks = _uniform_tele(nodes, float(size["n"])).withColumn("rank", F.col("t"))
+        dm = size["nd"] / size["n"]  # every node starts at rank t = 1/n
+        converged = False
+        free_prev = None
+        for it in range(1, max_iterations + 1):
+            tele = ranks.select("node", "dangling", "t", F.col("rank").alias("prev"))
+            ranks, free_now, seen = _pinned_observing(
+                _step(e, None, tele, ranks, damping, dm=dm),
+                delta=F.sum(F.abs(F.col("rank") - F.col("prev"))),
+                dm=F.coalesce(
+                    F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0)
+                ),
+            )
+            if free_prev is not None:
+                free_prev()
+            free_prev, dm = free_now, seen["dm"]
+            if seen["delta"] < tol:
+                converged = True
+                break
+    return ranks.select("node", "rank"), it, converged
 
 
 def pagerank_personalized(
@@ -271,7 +335,7 @@ def pagerank_personalized(
     """
     if iterations < 1:
         raise ValueError("pagerank needs at least 1 iteration")
-    e, deg, nodes = _prepared(edges, src, dst, cache=False)
+    e, deg, nodes = _prepared(edges, src, dst)
     w = teleport.select(
         F.col(teleport.columns[0]).alias("node"),
         F.col(teleport.columns[1]).cast("double").alias("w"),
@@ -303,9 +367,8 @@ def pagerank_personalized(
             if free_prev is not None:
                 free_prev()
             free_prev = free_now
-    if round_to is not None:
-        ranks = ranks.select("node", F.round("rank", round_to).alias("rank"))
-    return ranks
+    rank = F.col("rank") if round_to is None else F.round("rank", round_to)
+    return ranks.select("node", rank.alias("rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -315,58 +378,50 @@ def pagerank_personalized(
 # ---------------------------------------------------------------------------
 
 
-def _und_prepared(edges: DataFrame, src: str, dst: str, cache: bool = True):
-    """Symmetrized distinct edge list (co-partitioned on src) + nodes.
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every edge, distinct, co-partitioned on src.
 
     Components are an UNDIRECTED notion, so each input edge
-    contributes both directions. Self-loops are dropped from the edge
-    list (they never merge anything) but their endpoints stay nodes —
-    a node whose only edge is a self-loop is its own singleton
-    component, not a vanished vertex. NULL endpoints are dropped as in
-    ``_prepared`` (not meaningful vertices).
-
-    ``cache``: when True the symmetrized list and node set are
-    materialized as InMemoryRelations so every reference is a leaf.
-    k_core is the one caller where this is a driver-verified win
-    (uncached, its 3-round plan re-embedded the edge-prep subtree 972
-    times — 808 Exchange nodes, plans/r12/graph_kcore_before.txt —
-    and caching took it 3.63 -> 1.92 s). connected_components and
-    triangle_count pass cache=False (r13): their reference fan-out is
-    small enough that runtime exchange reuse already deduplicates
-    execution, and the committed-protocol r12 numbers showed the cache
-    a pessimization there (0.47x / 0.68x). Converged variants pass
-    cache=False and localCheckpoint instead (eager RDD pin that also
-    truncates lineage).
-    """
+    contributes both directions. Self-loops are kept here: they never
+    merge anything, but they make every endpoint a ``src``, so the
+    node set is one shuffle-free distinct over this list — a node
+    whose only edge is a self-loop stays its own singleton component,
+    not a vanished vertex. NULL endpoints are dropped as in
+    ``_out_edges`` (not meaningful vertices)."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .na.drop(subset=["src", "dst"])
     )
-    if cache:
-        e = e.cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    und = (
+    return (
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
         .distinct()
         .repartition("src")
     )
-    if cache:
-        und = und.cache()
-        nodes = nodes.cache()
-    return und, nodes
+
+
+def _und_split(sym: DataFrame):
+    """(self-loop-free edge list, nodes[node]) of a ``_symmetric``
+    list; both keep its src partitioning."""
+    return (
+        sym.filter(F.col("src") != F.col("dst")),
+        sym.select(F.col("src").alias("node")).distinct(),
+    )
+
+
+def _und_prepared(edges: DataFrame, src: str, dst: str):
+    """Lazy symmetrized distinct edge list (co-partitioned on src) +
+    nodes, uncached for the same reason as ``_prepared``; k_core pins
+    its edge list per round instead."""
+    return _und_split(_symmetric(edges, src, dst))
 
 
 def _cc_round(und: DataFrame, comp: DataFrame) -> DataFrame:
     """One hash-min round: comp'[v] = min(comp[v], min over neighbors
-    u of comp[u]). ONE equi-join + ONE groupBy, both hash-partitioned
-    on the reused edge partitioning — the same per-iteration shuffle
-    posture as PageRank's ``_step`` (only the O(nodes) label table
-    moves; the symmetrized edge list stays put)."""
+    u of comp[u]), with the input label kept as ``prev``. ONE
+    equi-join + ONE groupBy, both hash-partitioned on the reused edge
+    partitioning — the same per-iteration shuffle posture as
+    PageRank's ``_step`` (only the O(nodes) label table moves; the
+    symmetrized edge list stays put)."""
     nbr = (
         comp.join(und, comp["node"] == und["src"])
         .groupBy("dst")
@@ -379,24 +434,26 @@ def _cc_round(und: DataFrame, comp: DataFrame) -> DataFrame:
             F.least(
                 F.col("comp"), F.coalesce(F.col("nm"), F.col("comp"))
             ).alias("comp"),
+            F.col("comp").alias("prev"),
         )
     )
 
 
 def _cc_pointer_jump(comp: DataFrame) -> DataFrame:
-    """comp''[v] = min(comp'[v], comp'[comp'[v]]) — pointer jumping.
-    Labels are node ids (mins over node-id sets), so the label row
-    always exists; the left join + coalesce is belt-and-braces. This
-    halves label-tree depth per application, so hash-min + jump
-    converges in O(log diameter) rounds instead of O(diameter) — the
-    difference between ~20 and ~10^4 rounds on a chain-shaped crawl
-    frontier."""
+    """comp''[v] = min(comp'[v], comp'[comp'[v]]) — pointer jumping,
+    carrying ``prev`` through. Labels are node ids (mins over node-id
+    sets), so the label row always exists; the left join + coalesce is
+    belt-and-braces. This halves label-tree depth per application, so
+    hash-min + jump converges in O(log diameter) rounds instead of
+    O(diameter) — the difference between ~20 and ~10^4 rounds on a
+    chain-shaped crawl frontier."""
     a, b = comp.alias("a"), comp.alias("b")
     return a.join(b, F.col("a.comp") == F.col("b.node"), "left").select(
         F.col("a.node").alias("node"),
         F.least(
             F.col("a.comp"), F.coalesce(F.col("b.comp"), F.col("a.comp"))
         ).alias("comp"),
+        F.col("a.prev").alias("prev"),
     )
 
 
@@ -419,7 +476,7 @@ def connected_components(
     """
     if rounds < 1:
         raise ValueError("connected_components needs at least 1 round")
-    und, nodes = _und_prepared(edges, src, dst, cache=False)
+    und, nodes = _und_prepared(edges, src, dst)
     comp = nodes.select("node", F.col("node").alias("comp"))
     free_prev = None
     for i in range(rounds):
@@ -431,7 +488,7 @@ def connected_components(
             if free_prev is not None:
                 free_prev()
             free_prev = free_now
-    return comp
+    return comp.select("node", "comp")
 
 
 def k_core(
@@ -477,7 +534,7 @@ def k_core(
     """
     if rounds < 1:
         raise ValueError("k_core needs at least 1 round")
-    und, _nodes = _und_prepared(edges, src, dst, cache=False)
+    und, _nodes = _und_prepared(edges, src, dst)
     e, free_e = _pinned(und)
     kept = None
     for i in range(rounds):
@@ -505,31 +562,40 @@ def k_core_converged(
 ) -> tuple[DataFrame, int, bool]:
     """Peel to the fixed point -> (nodes, rounds_run, converged): the
     EXACT k-core (every surviving node has >= k surviving neighbors).
-    Same per-round shape as ``k_core`` with a 1-row node-count probe
-    and localCheckpoint-pinned iterates; ``converged`` False means the
+    Same per-round shape as ``k_core``; ``converged`` False means the
     cap truncated peeling (same contract as the other converged graph
     variants). An emptied graph converges immediately (the empty set
-    IS the k-core)."""
-    und, _nodes = _und_prepared(edges, src, dst, cache=False)
-    e, free_e = _pinned(und)
-    prev = e.select("src").distinct().count()
-    it = 0
+    IS the k-core).
+
+    One round is one pinned plan: each round's surviving edge list is
+    pinned with ``localCheckpoint(eager=True)`` and its edge count is
+    observed on that same job. Peeling only removes edges, and a round
+    that removes a node removes all its edges, so an unchanged edge
+    count is exactly the unchanged node set — the fixed point — with
+    no probe job of its own. Each superseded edge list is freed once
+    its successor is pinned; the call leaves one pin behind, the final
+    edge list under the returned nodes."""
+    if max_rounds < 1:
+        raise ValueError("k_core_converged needs at least 1 round")
+    und, _nodes = _und_prepared(edges, src, dst)
+    edge_count = F.count(F.lit(1))
+    e, free_e, seen = _pinned_observing(und, m=edge_count)
     converged = False
     for it in range(1, max_rounds + 1):
+        prev = seen["m"]
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         kept = deg.filter(F.col("d") >= k).select(F.col("src").alias("node"))
-        nxt, free_nxt = _pinned(
+        nxt, free_nxt, seen = _pinned_observing(
             e.join(kept.withColumnRenamed("node", "src"), "src", "semi")
             .join(kept.withColumnRenamed("node", "dst"), "dst", "semi")
-            .select("src", "dst")
+            .select("src", "dst"),
+            m=edge_count,
         )
         free_e()  # round k-1's edges die once round k is pinned
         e, free_e = nxt, free_nxt
-        now = e.select("src").distinct().count()
-        if now == prev:
+        if seen["m"] == prev:
             converged = True
             break
-        prev = now
     return (
         e.select(F.col("src").alias("node")).distinct(),
         it,
@@ -560,7 +626,7 @@ def triangle_count(
     nodes). The orientation changes the plan cost, never the result,
     so the DuckDB oracle can replay the plain node-id formulation.
     """
-    und, nodes = _und_prepared(edges, src, dst, cache=False)
+    und, nodes = _und_prepared(edges, src, dst)
     # deg feeds both endpoint-rank joins and fwd feeds three branches
     # (both wedge sides + the closing-edge list); the identical
     # aggregation/exchange subtrees are deduplicated at runtime by
@@ -614,32 +680,36 @@ def connected_components_converged(
     dst: str = "dst",
 ) -> tuple[DataFrame, int, bool]:
     """Hash-min + pointer-jumping to a fixed point ->
-    (comp, rounds_run, converged). Each round is one hash-min
-    propagation followed by one pointer jump, then a 1-row
-    changed-label probe (the same O(1)-scalar stopping pattern as
-    ``pagerank_converged``); iterates are localCheckpoint-pinned so
-    round k's action never replays rounds 1..k-1. ``converged`` False
-    means the ``max_rounds`` cap truncated propagation and labels may
-    still be merging (r9 ADVICE: never make the caller guess)."""
-    und, nodes = _und_prepared(edges, src, dst, cache=False)
-    und = und.localCheckpoint(eager=True)
-    comp = nodes.select("node", F.col("node").alias("comp")).localCheckpoint(
-        eager=True
-    )
-    it = 0
-    converged = False
-    free_prev = None  # round k-1's labels die once round k's probe is read
-    for it in range(1, max_rounds + 1):
-        nxt, free_nxt = _pinned(_cc_pointer_jump(_cc_round(und, comp)))
-        changed = (
-            nxt.join(comp.withColumnRenamed("comp", "prev"), "node")
-            .agg(F.sum((F.col("comp") != F.col("prev")).cast("long")).alias("d"))
-            .collect()[0].d
-        )
-        if free_prev is not None:
-            free_prev()
-        comp, free_prev = nxt, free_nxt
-        if not changed:
-            converged = True
-            break
-    return comp, it, converged
+    (comp, rounds_run, converged). ``converged`` False means the
+    ``max_rounds`` cap truncated propagation and labels may still be
+    merging (r9 ADVICE: never make the caller guess).
+
+    One round is one pinned plan: one hash-min propagation followed
+    by one pointer jump, pinned with ``localCheckpoint(eager=True)``
+    so round k never replays rounds 1..k-1. The label table carries
+    the round's input label as ``prev``, so the changed-label count
+    that stops the loop is observed on the pin's own job. The
+    symmetrized edge list is pinned once and the initial labels are a
+    projection of it; superseded rounds and the edge pin are freed,
+    so the call leaves one pin behind, the returned labels."""
+    if max_rounds < 1:
+        raise ValueError("connected_components_converged needs at least 1 round")
+    with ExitStack() as set_up:  # the returned labels never read the edge pin
+        sym, free_sym = _pinned(_symmetric(edges, src, dst))
+        set_up.callback(free_sym)
+        und, nodes = _und_split(sym)
+        comp = nodes.select("node", F.col("node").alias("comp"))
+        converged = False
+        free_prev = None
+        for it in range(1, max_rounds + 1):
+            comp, free_now, seen = _pinned_observing(
+                _cc_pointer_jump(_cc_round(und, comp)),
+                changed=F.count_if(F.col("comp") != F.col("prev")),
+            )
+            if free_prev is not None:
+                free_prev()
+            free_prev = free_now
+            if not seen["changed"]:
+                converged = True
+                break
+    return comp.select("node", "comp"), it, converged

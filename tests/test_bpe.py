@@ -62,3 +62,17 @@ def test_train_stops_when_no_repeating_pair(spark):
     merges = B.bpe_train(singleton, num_merges=10)
     # every pair occurs once -> nothing reaches the cnt>=2 floor
     assert merges == []
+
+
+def test_train_in_memory_path_frees_its_vocab_checkpoint(spark, docs):
+    """The in-memory path trains on the fetched vocab, so the eager
+    word-frequency checkpoint it fetched from must not stay in
+    storage after the call."""
+    jsc = spark.sparkContext._jsc
+
+    def census() -> set:
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = census()
+    assert B.bpe_train(docs, num_merges=2)[0] == ("l", "o")
+    assert not (census() - before), "bpe_train left checkpoint blocks behind"

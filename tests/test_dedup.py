@@ -166,6 +166,7 @@ def test_embedding_neardup_guard_routes_to_blocked_exact_path(spark, sf_dir):
     bound used to be documentation only) — and the blocked output must
     EQUAL the broadcast-exact output pair-for-pair."""
     import os
+    import warnings
 
     from pyspark.sql import functions as F2
 
@@ -177,10 +178,14 @@ def test_embedding_neardup_guard_routes_to_blocked_exact_path(spark, sf_dir):
         )
 
     exact = key(D.embedding_neardup_pairs(emb, 0.2))
-    blocked = key(
-        D.embedding_neardup_pairs(emb, 0.2, max_broadcast_bytes=0, n_blocks=4)
-    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        blocked = key(
+            D.embedding_neardup_pairs(emb, 0.2, max_broadcast_bytes=0, n_blocks=4)
+        )
     assert len(exact) > 0 and blocked == exact
+    # the tile function's hints let applyInPandas pick its eval type
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
     # cross-tile orientation: ids engineered so the larger id hashes
     # into the smaller block and vice versa — every orientation kept
     rows = [(i, [1.0, 0.0]) for i in range(40)]  # all mutually dup

@@ -290,3 +290,123 @@ def test_kcore_converged_flag_false_when_capped(spark):
     pairs = [(i, i + 1) for i in range(30)]
     _n, rounds, converged = k_core_converged(_edges(spark, pairs), k=2, max_rounds=2)
     assert rounds == 2 and not converged
+
+
+# ---------------------------------------------------------------------------
+# Empty graphs and the converged loops' shape
+# ---------------------------------------------------------------------------
+
+
+def _no_node_edges(spark):
+    # the one edge has a NULL endpoint, so the graph has no node
+    return spark.createDataFrame([(None, 1)], "src long, dst long")
+
+
+def test_pagerank_empty_graph_returns_no_ranks(spark):
+    ranks = pagerank(_no_node_edges(spark))
+    assert ranks.columns == ["node", "rank"] and ranks.count() == 0
+
+
+def test_pagerank_converged_empty_graph_is_converged(spark):
+    ranks, its, converged = pagerank_converged(_no_node_edges(spark))
+    assert ranks.columns == ["node", "rank"] and ranks.count() == 0
+    assert its == 0 and converged
+
+
+def test_components_and_kcore_converged_empty_graph(spark):
+    comp, rounds, converged = connected_components_converged(_no_node_edges(spark))
+    assert comp.columns == ["node", "comp"] and comp.count() == 0
+    assert rounds == 1 and converged
+    core, rounds, converged = k_core_converged(_no_node_edges(spark), k=2)
+    assert core.count() == 0 and rounds == 1 and converged
+
+
+# Each converged loop, capped so that it runs exactly `cap` rounds (tol
+# 0 never stops PageRank; a 40-chain needs ~6 jump rounds and a 30-chain
+# ~15 peels), and the pins its set-up takes before the first round.
+_CAPPED = {
+    "pagerank": (
+        lambda spark, cap: pagerank_converged(
+            _edges(spark, [(i, (i * 3 + 1) % 7) for i in range(7)] + [(2, 9)]),
+            tol=0.0, max_iterations=cap,
+        ),
+        2,  # edge list, node table
+    ),
+    "components": (
+        lambda spark, cap: connected_components_converged(
+            _edges(spark, [(i, i + 1) for i in range(40)]), max_rounds=cap
+        ),
+        1,  # symmetrized edge list
+    ),
+    "kcore": (
+        lambda spark, cap: k_core_converged(
+            _edges(spark, [(i, i + 1) for i in range(30)]), k=2, max_rounds=cap
+        ),
+        1,  # symmetrized edge list
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_CAPPED))
+def test_converged_round_is_one_pinned_plan(spark, monkeypatch, loop):
+    """Job census by job group: every localCheckpoint runs in a group
+    of its own, so a job in the call's group is a probe outside any
+    pin (a collect or count). Each round must add exactly one pin and
+    no probe, whatever the round count."""
+    run, setup_pins = _CAPPED[loop]
+    sc = spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    real = frame.localCheckpoint
+
+    def census(cap):
+        outer, pins = f"{loop}-cap{cap}", []
+
+        def pin(self, *args, **kwargs):
+            pins.append(f"{outer}-pin{len(pins)}")
+            sc.setJobGroup(pins[-1], pins[-1])
+            try:
+                return real(self, *args, **kwargs)
+            finally:
+                sc.setJobGroup(outer, outer)
+
+        monkeypatch.setattr(frame, "localCheckpoint", pin)
+        sc.setJobGroup(outer, outer)
+        try:
+            _res, rounds, converged = run(spark, cap)
+        finally:
+            monkeypatch.setattr(frame, "localCheckpoint", real)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rounds == cap and not converged
+        assert all(jobs(g) for g in pins)  # positive control: pins run jobs
+        return len(jobs(outer)), len(pins)
+
+    for cap in (1, 2, 3):
+        probes, pins = census(cap)
+        assert probes == 0, f"{loop}: {probes} jobs outside a pin at cap {cap}"
+        assert pins == setup_pins + cap, f"{loop}: {pins} pins for {cap} rounds"
+
+
+@pytest.mark.parametrize("loop", sorted(_CAPPED))
+def test_converged_call_leaves_only_its_result_pinned(spark, loop):
+    """A converged call frees every pin but the returned iterate:
+    getPersistentRDDs grows by exactly one entry, and the result still
+    reads after the intermediate pins are gone."""
+    jsc = spark.sparkContext._jsc
+
+    def census() -> set:
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    run, _setup_pins = _CAPPED[loop]
+    before = census()
+    res, _rounds, _converged = run(spark, 3)
+    left = census() - before
+    try:
+        assert len(left) == 1, f"{loop} left {len(left)} pins behind"
+        assert res.count() > 0
+    finally:
+        for i in left:
+            r = jsc.getPersistentRDDs().get(i)
+            if r is not None:
+                r.unpersist(False)

@@ -47,7 +47,6 @@ BNLJ_ALLOWED = {
                             # (the ADC scan; same bound as similarity_topk)
     "graph_pagerank",       # 1-row dangling-mass broadcast folded into each
                             # iteration (the no-driver-action alternative)
-    "graph_pagerank_converged",  # same 1-row dangling broadcast per step
     "graph_ppr_seeded",          # same 1-row dangling broadcast per step
     "sketch_overlap_sources",    # O(groups)-row group-list broadcast fanning
                                  # each sketch row to its partners — bounded
